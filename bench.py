@@ -108,14 +108,22 @@ def normalized_vs_prev(
     import re
 
     here = os.path.dirname(os.path.abspath(__file__))
-    cands = sorted(
-        glob.glob(os.path.join(here, "BENCH_r[0-9]*.json")),
-        key=lambda p: int(re.search(r"r(\d+)", os.path.basename(p)).group(1)),
-    )
-    if not cands:
+    # only the per-round records: a variant such as BENCH_r10_c8.json
+    # (another core count) shares its round number and would otherwise
+    # tie with BENCH_r10.json, leaving the pick to glob's listing order
+    rounds = [
+        m
+        for m in (
+            re.fullmatch(r"BENCH_r(\d+)\.json", os.path.basename(p))
+            for p in glob.glob(os.path.join(here, "BENCH_r[0-9]*.json"))
+        )
+        if m
+    ]
+    if not rounds:
         return None
+    newest = max(rounds, key=lambda m: int(m.group(1)))
     try:
-        with open(cands[-1]) as f:
+        with open(os.path.join(here, newest.group(0))) as f:
             prev = json.load(f)
     except (OSError, json.JSONDecodeError):
         return None
@@ -152,9 +160,8 @@ def normalized_vs_prev(
     worst = dict(
         sorted(regressed.items(), key=lambda kv: -kv[1])[:3]
     )
-    tag = re.search(r"(r\d+)", os.path.basename(cands[-1])).group(1)
     return {
-        "prev": tag,
+        "prev": f"r{newest.group(1)}",
         "cal_ratio": round(cal_ratio, 3),
         "n_common": len(common),
         # read BOTH medians: the calibration loop itself carries
@@ -179,6 +186,7 @@ def main() -> None:
     subset = os.environ.get("SPARK_GRAFT_QUERIES")
     from weather_bigdata_project_spark.session import get_spark
     from weather_bigdata_project_spark import registry
+    from weather_bigdata_project_spark.operators import textops
 
     registry.load()
     headline = HEADLINE
@@ -204,30 +212,6 @@ def main() -> None:
             registry.QUERIES[name](spark, warm_dir).write.format("noop").mode(
                 "overwrite"
             ).save()
-
-    def clear_session_state() -> None:
-        # Pinned frames (lazy localCheckpoint) persist RDD blocks for the
-        # life of the session; across a 40-query suite they accumulate
-        # into real GC/storage pressure that slows LATER queries by 3-7x
-        # (measured: dedup_minhash_lsh 3.4s isolated vs 11.1s late in a
-        # polluted suite). Dropping them between queries makes each
-        # measurement a fresh-session number.
-        spark.catalog.clearCache()
-        for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
-            rdd.unpersist()
-        # memoized shingle checkpoints died with the unpersist above
-        from weather_bigdata_project_spark.operators import textops
-
-        textops.clear_shingle_memo()
-        # Broadcast blocks and shuffle files are reaped by ContextCleaner
-        # only when the driver GC collects their handles; across a
-        # 50-query suite they accumulate into heap/storage pressure that
-        # inflates LATE queries 3-6x (measured: join_geo_nearest_station
-        # 1.7s isolated vs 9.8s late in a polluted suite). An explicit
-        # JVM GC between queries lets the cleaner run, making every
-        # measurement a fresh-session number (GC time itself is outside
-        # the timed window).
-        spark.sparkContext._jvm.System.gc()
 
     # Fixed-work calibration: a constant CPU-bound JVM loop (no I/O, no
     # shuffle) whose wall time measures THIS BOX on THIS RUN. Cross-round
@@ -268,7 +252,7 @@ def main() -> None:
         # run measures another run's cached frames)
         dt = None
         for r in range(reps):
-            clear_session_state()
+            textops.release_pins(spark)
             t0 = time.time()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             d = round(time.time() - t0, 3)

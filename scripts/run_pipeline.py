@@ -50,7 +50,7 @@ def run(sf_dir: str, work_dir: str, cpus: int | str = 8) -> dict[str, int]:
         enriched, lake, os.path.join(ckpt, "enriched"), fmt="parquet"
     )
     q2 = jobs.start_lake_sink(
-        jobs.alerts_stream(jobs.enriched_stream(jobs.wire_file_stream(spark, wire_dir))),
+        jobs.alerts_stream(enriched),
         alerts,
         os.path.join(ckpt, "alerts"),
         fmt="json",

@@ -173,3 +173,28 @@ def test_bench_payload_respects_driver_line_budget():
     payload["queries"] = {"_omitted_n": len(times)}
     fb = json.dumps(payload, separators=(",", ":"))
     assert len(fb) < 300 and json.loads(fb)["n_queries"] == len(times)
+
+
+def test_normalized_vs_prev_ignores_core_count_variants(monkeypatch):
+    """BENCH_r10_c8.json shares its round number with BENCH_r10.json;
+    the comparison must pick the per-round record whatever order glob
+    lists the files in."""
+    import glob
+    import json
+
+    sys.path.insert(0, _REPO)
+    import bench
+
+    with open(os.path.join(_REPO, "BENCH_r10.json")) as f:
+        rec = json.load(f)["parsed"]
+    names = ["BENCH_r09.json", "BENCH_r09_c8.json", "BENCH_r10.json",
+             "BENCH_r10_c8.json"]
+    for order in (names, names[::-1]):
+        listing = [os.path.join(_REPO, n) for n in order]
+        monkeypatch.setattr(glob, "glob", lambda _pat, listing=listing: listing)
+        got = bench.normalized_vs_prev(
+            rec["queries"], 2 * rec["calibration_s"], rec["sf"]
+        )
+        assert got["prev"] == "r10"
+        assert got["cal_ratio"] == 2.0
+        assert got["median_raw_ratio"] == 1.0

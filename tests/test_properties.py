@@ -558,7 +558,7 @@ def test_emb_dim_multifragment_dir_and_ragged_fallback(spark):
 
     from weather_bigdata_project_spark.queries.similarity import emb_dim
 
-    def write_frag(path, vecs, start):
+    def write_frag(path, vecs, start, **kw):
         tbl = pa.table(
             {
                 "vec_id": pa.array(
@@ -568,7 +568,7 @@ def test_emb_dim_multifragment_dir_and_ragged_fallback(spark):
                 "label": pa.array([0] * len(vecs), pa.int32()),
             }
         )
-        pq.write_table(tbl, path)
+        pq.write_table(tbl, path, **kw)
 
     with tempfile.TemporaryDirectory() as tmp:
         d = os.path.join(tmp, "embeddings.parquet")
@@ -597,6 +597,24 @@ def test_emb_dim_multifragment_dir_and_ragged_fallback(spark):
             os.path.join(d, "part-1.parquet"),
             [[3.0] * 4, [4.0] * 8],
             2,
+        )
+        assert emb_dim(tmp) is None
+
+    # (c) a fragment whose footer records no statistics cannot prove the
+    # lists null-free: unprovable, not assumed clean
+    with tempfile.TemporaryDirectory() as tmp:
+        d = os.path.join(tmp, "embeddings.parquet")
+        os.makedirs(d)
+        write_frag(
+            os.path.join(d, "part-0.parquet"),
+            [[1.0] * 8, [2.0] * 8],
+            0,
+        )
+        write_frag(
+            os.path.join(d, "part-1.parquet"),
+            [[3.0] * 8, [4.0] * 8],
+            2,
+            write_statistics=False,
         )
         assert emb_dim(tmp) is None
 

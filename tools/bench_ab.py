@@ -88,17 +88,20 @@ def worker(tree: str, sf_dir: str, names: list[str]) -> None:
         ).save()
 
     def clear() -> None:
+        from weather_bigdata_project_spark.operators import textops
+
+        if hasattr(textops, "release_pins"):
+            textops.release_pins(spark)
+            return
+        # inline copy for arm A's historical trees, which predate
+        # release_pins (the r4 tree predates clear_shingle_memo too)
         spark.catalog.clearCache()
         for rdd in list(
             spark.sparkContext._jsc.getPersistentRDDs().values()
         ):
             rdd.unpersist()
-        try:
-            from weather_bigdata_project_spark.operators import textops
-
+        if hasattr(textops, "clear_shingle_memo"):
             textops.clear_shingle_memo()
-        except (ImportError, AttributeError):
-            pass  # the r4 tree predates the memo helper
         spark.sparkContext._jvm.System.gc()
 
     cal = None

@@ -2,15 +2,26 @@
 queries at sf0.1 — the checkable evidence behind SCALE.md's claims
 (pushdown, pruning, broadcast strategy, codegen coverage).
 
-Usage: python3 tools/dump_plans.py
+With --tag, capture optimization evidence instead: write the FULL
+`.explain("formatted")` output of each named query (default: the bench
+HEADLINE list) to DIR/<query>_<TAG>.txt, so before/after plan claims are
+checkable without running Spark. Cores come from $SPARK_GRAFT_CPUS
+(default 8), so the captured plans embed the partition counts of the
+benchmarked config.
+
+Usage:
+    python3 tools/dump_plans.py
+    python3 tools/dump_plans.py --tag before --out-dir plans/r11 [names...]
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
 
 SHOW = [
     "weather_enrich",
@@ -109,14 +120,47 @@ SHOW = [
 ]
 
 
+def capture(spark, sf_dir: str, names: list[str], tag: str, out_dir: str):
+    from weather_bigdata_project_spark import registry
+    from weather_bigdata_project_spark.plans import checks as C
+
+    os.makedirs(out_dir, exist_ok=True)
+    for name in names:
+        plan = C.formatted_plan(registry.QUERIES[name](spark, sf_dir))
+        path = os.path.join(out_dir, f"{name}_{tag}.txt")
+        with open(path, "w") as f:
+            f.write(plan)
+        print("wrote", path)
+
+
 def main() -> None:
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--tag", help="capture full plans as <query>_<TAG>.txt")
+    ap.add_argument("--out-dir", default=os.path.join(_REPO, "plans"))
+    ap.add_argument("--sf", help="data dir (default: $SPARK_GRAFT_SF_DIR)")
+    ap.add_argument("names", nargs="*")
+    args = ap.parse_args()
+    if args.names and not args.tag:
+        ap.error("query names need --tag (PLANS.md always dumps SHOW)")
+
     from weather_bigdata_project_spark import registry
     from weather_bigdata_project_spark.plans import checks as C
     from weather_bigdata_project_spark.session import get_spark
 
     registry.load()
-    spark = get_spark("plans", cpus=8)
+    # PLANS.md keeps its fixed 8-core layout; captures follow the bench env
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or 8) if args.tag else 8
+    spark = get_spark("plans", cpus=cpus)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    if args.sf:
+        sf_dir = args.sf
+    if args.tag:
+        import bench
+
+        capture(spark, sf_dir, args.names or list(bench.HEADLINE),
+                args.tag, args.out_dir)
+        spark.stop()
+        return
 
     out = [
         "# PLANS — physical plans of the headline queries\n",
@@ -137,8 +181,7 @@ def main() -> None:
         out.append(f"\n## {name}\n\n```\n{tree}\n```\n")
         if scans:
             out.append("Scan details:\n\n```\n" + "\n".join(scans) + "\n```\n")
-    with open(os.path.join(os.path.dirname(os.path.dirname(
-            os.path.abspath(__file__))), "PLANS.md"), "w") as f:
+    with open(os.path.join(_REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print("wrote PLANS.md")
     spark.stop()

@@ -149,10 +149,7 @@ def main() -> None:
     tables.load = spy_load
 
     def run(name):
-        spark.catalog.clearCache()
-        for rdd in list(sc._jsc.getPersistentRDDs().values()):
-            rdd.unpersist()
-        textops.clear_shingle_memo()
+        textops.release_pins(spark)
         loaded.clear()
         before = set(_stage_map(store, jvm, gw))
         fs_before = fs_stats.getLong("bytesRead")

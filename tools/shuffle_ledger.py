@@ -392,19 +392,12 @@ def main() -> None:
     store = sc._jsc.sc().statusStore()
     jvm, gw = sc._jvm, sc._gateway
 
-    def clear():
-        spark.catalog.clearCache()
-        for rdd in list(sc._jsc.getPersistentRDDs().values()):
-            rdd.unpersist()
-        textops.clear_shingle_memo()
-        jvm.System.gc()
-
     ledger = {}
     for name in names:
         fn = registry.QUERIES[name]
         points = {}
         for d in sf_dirs:
-            clear()
+            textops.release_pins(spark)
             points[str(sf_of(d))] = measure(spark, fn, d, store, jvm, gw)
         entry = {
             "points": points,

@@ -244,9 +244,15 @@ def sampled_table_duck(sql: str, table: str, pred: str) -> str:
 #:       (point it at the lake / HDFS in production): survives executor
 #:       loss AND cuts lineage — the right mode for very long dedup
 #:       chains where recompute-from-scratch is itself too expensive.
-#:   local — localCheckpoint (executor-storage, lineage cut): fastest
-#:       on a single box; opt-in for single-node benching only.
+#: Any other value raises at import rather than silently running a
+#: strategy the deployment did not ask for.
+STRATEGIES = ("persist", "checkpoint")
 _STRATEGY = __import__("os").environ.get("SPARK_GRAFT_MATERIALIZE", "persist")
+if _STRATEGY not in STRATEGIES:
+    raise ValueError(
+        f"SPARK_GRAFT_MATERIALIZE={_STRATEGY!r}: expected one of "
+        f"{', '.join(STRATEGIES)}"
+    )
 
 
 def _reliable_checkpoint(df: DataFrame) -> DataFrame:
@@ -282,8 +288,6 @@ def materialize(df: DataFrame, cut_lineage: bool = False) -> DataFrame:
     measured one parquet scan per BPE merge round); eager per-round
     checkpoints are the MLlib iterative pattern — round k reads round
     k-1's blocks, the source is scanned once."""
-    if _STRATEGY == "local":
-        return df.localCheckpoint(eager=False)
     if _STRATEGY == "checkpoint":
         return _reliable_checkpoint(df)
     if cut_lineage:
@@ -333,13 +337,36 @@ def doc_shingle_ids_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def clear_shingle_memo() -> None:
-    """Drop memoized shingle checkpoints. MUST be called by any harness
-    that force-unpersists the session's RDDs (bench.py does, for
-    per-query isolation): an unpersisted localCheckpoint block cannot
-    be recomputed, so a stale memo entry would throw
-    CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND on next use."""
+def release_pins(spark: SparkSession) -> None:
+    """Release every pin the session holds, so the next query runs as if
+    in a fresh session. Harnesses call it between queries, outside the
+    timed window (the GC below is not free). Order matters:
+
+    1. ``catalog.clearCache()`` drops CacheManager entries, which would
+       otherwise be swapped into any later plan whose subtree
+       ``sameResult()``-matches a pinned one.
+    2. Unpersist every entry of ``getPersistentRDDs()``: pinned frames
+       (``materialize`` persists and eager local checkpoints) hold RDD
+       blocks for the life of the session; across a 40-query suite
+       they accumulate into GC/storage pressure that slows LATER
+       queries 3-7x (measured: dedup_minhash_lsh 3.4 s isolated vs
+       11.1 s late in a polluted suite).
+    3. Clear ``_GRAM_MEMO``. Its entries are frames whose pins steps 1
+       and 2 just dropped: a stale ``persist`` entry silently re-runs
+       the md5 shingling at every reference, and a lineage-cut local
+       checkpoint cannot be recomputed at all (it throws
+       CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND on next use). This coupling is
+       why the memo and the unpersist live in one function.
+    4. ``System.gc()`` on the driver JVM: broadcast blocks and shuffle
+       files are reaped by ContextCleaner only when the driver GC
+       collects their handles; across a 50-query suite they inflate
+       LATE queries 3-6x (measured: join_geo_nearest_station 1.7 s
+       isolated vs 9.8 s late in a polluted suite)."""
+    spark.catalog.clearCache()
+    for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
+        rdd.unpersist()
     _GRAM_MEMO.clear()
+    spark.sparkContext._jvm.System.gc()
 
 
 # --- DuckDB oracle CTE twins ---------------------------------------------

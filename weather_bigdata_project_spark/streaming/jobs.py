@@ -289,6 +289,32 @@ def sliding_event_counts_stream(
     )
 
 
+def _interval_join(events: DataFrame, watermark: str, how: str) -> DataFrame:
+    """Purchases joined to the same user's clicks in the 10 minutes
+    before each, both sides watermarked on an instant-typed TIMESTAMP
+    (the shared body of the three public interval joins below)."""
+    clicks = (
+        events.filter(F.col("event_type") == "click")
+        .select(
+            F.col("user_id").alias("c_user"),
+            F.col("ts").cast("timestamp").alias("c_ts"),
+            F.col("value").alias("c_value"),
+        )
+        .withWatermark("c_ts", watermark)
+    )
+    purchases = events.filter(F.col("event_type") == "purchase").select(
+        "event_id", "user_id", F.col("ts").cast("timestamp").alias("ts")
+    ).withWatermark("ts", watermark)
+    return purchases.join(
+        clicks,
+        F.expr(
+            "c_user = user_id AND c_ts >= ts - INTERVAL 10 MINUTES "
+            "AND c_ts < ts"
+        ),
+        how,
+    )
+
+
 def interval_join_clicks_purchases(
     events: DataFrame, watermark: str = "1 hour"
 ) -> DataFrame:
@@ -308,26 +334,7 @@ def interval_join_clicks_purchases(
     (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE on ntz), so both sides cast —
     a fixed session-tz offset on both sides cannot change interval
     comparisons."""
-    clicks = (
-        events.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("ts").cast("timestamp").alias("c_ts"),
-            F.col("value").alias("c_value"),
-        )
-        .withWatermark("c_ts", watermark)
-    )
-    purchases = events.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", F.col("ts").cast("timestamp").alias("ts")
-    ).withWatermark("ts", watermark)
-    return purchases.join(
-        clicks,
-        F.expr(
-            "c_user = user_id AND c_ts >= ts - INTERVAL 10 MINUTES "
-            "AND c_ts < ts"
-        ),
-        "inner",
-    )
+    return _interval_join(events, watermark, "inner")
 
 
 def interval_left_join_clicks_purchases(
@@ -344,26 +351,7 @@ def interval_left_join_clicks_purchases(
     O(watermark-window); the test drains a multi-batch time-ordered
     replay so watermarks actually move, and rows inside the final
     watermark tail are (correctly) withheld at termination."""
-    clicks = (
-        events.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("ts").cast("timestamp").alias("c_ts"),
-            F.col("value").alias("c_value"),
-        )
-        .withWatermark("c_ts", watermark)
-    )
-    purchases = events.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", F.col("ts").cast("timestamp").alias("ts")
-    ).withWatermark("ts", watermark)
-    return purchases.join(
-        clicks,
-        F.expr(
-            "c_user = user_id AND c_ts >= ts - INTERVAL 10 MINUTES "
-            "AND c_ts < ts"
-        ),
-        "left_outer",
-    )
+    return _interval_join(events, watermark, "left_outer")
 
 
 def interval_full_join_clicks_purchases(
@@ -379,26 +367,7 @@ def interval_full_join_clicks_purchases(
     unmatched-click stream is exactly the input a re-marketing pipeline
     consumes, which is why the full-outer form (not two one-sided jobs
     scanning the stream twice) is the operator worth having."""
-    clicks = (
-        events.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("ts").cast("timestamp").alias("c_ts"),
-            F.col("value").alias("c_value"),
-        )
-        .withWatermark("c_ts", watermark)
-    )
-    purchases = events.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", F.col("ts").cast("timestamp").alias("ts")
-    ).withWatermark("ts", watermark)
-    return purchases.join(
-        clicks,
-        F.expr(
-            "c_user = user_id AND c_ts >= ts - INTERVAL 10 MINUTES "
-            "AND c_ts < ts"
-        ),
-        "full_outer",
-    )
+    return _interval_join(events, watermark, "full_outer")
 
 
 def stream_static_segment_enrich(

@@ -972,3 +972,26 @@ def test_pagerank_plan_is_iteration_constant(spark):
     # nested joins
     assert plan.count("InMemoryTableScan") <= 4
     assert plan.count("Exchange") <= 6
+
+
+def test_wire_feed_spreads_two_columns_before_synthesis(spark):
+    """wire_frame(partitions=n): exactly one shuffle, a round-robin of the
+    two-column events scan to n partitions, below the 14-string
+    synthesis. The default frame keeps its one spread exchange (the
+    fixture is a single row group), so batch plans do not move."""
+    import re
+
+    from weather_bigdata_project_spark import weather_domain as wd
+
+    for n in (8, 3):
+        df = wd.wire_frame(spark, SF_SMOKE, partitions=n)
+        plan = C.formatted_plan(df)
+        assert C.count_exchanges(plan) == 1
+        assert f"RoundRobinPartitioning({n})" in plan
+        assert re.search(r"^\(\d+\) Exchange\nInput \[2\]", plan, re.M), plan
+        assert df.rdd.getNumPartitions() == n
+
+    plan = C.formatted_plan(wd.wire_frame(spark, SF_SMOKE))
+    assert C.count_exchanges(plan) == 1
+    par = spark.sparkContext.defaultParallelism
+    assert f"RoundRobinPartitioning({par})" in plan

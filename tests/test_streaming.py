@@ -21,7 +21,7 @@ def wire_dir(spark):
     """Materialize the sf0.001 wire frame as JSON-lines micro-files (the
     lake the file-stream replays)."""
     d = tempfile.mkdtemp(prefix="wirelake_")
-    wd.wire_frame(spark, SF_SMOKE).repartition(8).write.mode("overwrite").json(d)
+    jobs.write_wire_feed(spark, SF_SMOKE, d)
     yield d
     shutil.rmtree(d, ignore_errors=True)
 
@@ -1415,7 +1415,6 @@ def test_step_spike_qc_stream_equals_batch_twin(spark, tmp_path):
     import shutil
 
     from pyspark.sql import Window
-    from pyspark.sql import types as Ty
 
     src = str(tmp_path / "wire_ranged")
     w = wd.wire_frame(spark, SF_SMOKE)
@@ -1430,12 +1429,8 @@ def test_step_spike_qc_stream_equals_batch_twin(spark, tmp_path):
     )
     for i, f in enumerate(sorted(glob.glob(os.path.join(src, "part-*")))):
         os.utime(f, (1_700_000_000 + i * 10, 1_700_000_000 + i * 10))
-    schema = Ty.StructType(
-        [Ty.StructField(n, Ty.StringType()) for n in wd.wire_wide_sql("é")]
-        + [Ty.StructField("event_id", Ty.LongType())]
-    )
     stream = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(jobs.WIRE_SCHEMA)
         .option("maxFilesPerTrigger", "1")
         .json(src)
     )

@@ -6,10 +6,11 @@ attributed to session drift (this box swings ~40% between sessions and
 the fixed-work calibration only partially divides that out). Drift vs
 code must be settled by measurement, not faith: the confound is
 BETWEEN-session machine state, so run both code versions in ONE
-session, strictly interleaved A/B/A/B..., and compare per-query bests.
+session, interleaved rep by rep (the first arm alternates: A B, B A,
+...), and compare per-query bests.
 
-Arms are git trees: A = the round-4 record commit (checked out into a
-worktree), B = the current HEAD. Each rep spawns a fresh worker
+Arms are git trees: A = the round-4 record commit (extracted with
+`git archive`), B = the current HEAD. Each rep spawns a fresh worker
 process pinned to one tree (sys.path isolation — two versions of the
 package cannot share one interpreter), builds the SAME tuned session
 the bench uses, warms at sf0.001, runs the fixed-work calibration
@@ -38,9 +39,18 @@ measured), and interleave-tests exactly that flag list. This makes
 the per-round ritual: `python3 tools/bench_ab.py --from-bench
 BENCH_r{N}.json` after each driver bench lands.
 
+`--pipeline` A/Bs the product path instead of registry queries: each
+worker imports its arm's `scripts/run_pipeline.run`, does WARM_DRAINS
+warm drains and then TIMED_DRAINS timed drains, each into a fresh work
+dir, checks wire rows == lake rows == event rows on every drain and
+prints the walls. Arms interleave per process as above; the report is
+the per-arm median wall and how many (rep, drain) pairs arm B won.
+
 Usage:
     python3 tools/bench_ab.py --ref 63e2eff [--reps 3] [names...]
     python3 tools/bench_ab.py --from-bench BENCH_r08.json [--reps 2]
+    python3 tools/bench_ab.py --pipeline --ref <commit> [--reps 5]
+        [--sf-dir DIR]
     python3 tools/bench_ab.py --worker <tree> <sf_dir> <names...>
 """
 
@@ -49,9 +59,14 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
+import statistics
 import subprocess
 import sys
+import tempfile
 import time
+from collections.abc import Callable
+from contextlib import redirect_stdout
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -69,6 +84,10 @@ REGRESSED_R5 = [
     "events_user_sessions",
     "weather_enrich",
 ]
+
+#: drains per --pipeline worker: untimed warm-up, then timed
+WARM_DRAINS = 2
+TIMED_DRAINS = 2
 
 
 def worker(tree: str, sf_dir: str, names: list[str]) -> None:
@@ -129,6 +148,42 @@ def worker(tree: str, sf_dir: str, names: list[str]) -> None:
     spark.stop()
 
 
+def pipeline_worker(tree: str, sf_dir: str) -> None:
+    """Run one pipeline arm: `tree`'s scripts/run_pipeline.run on every
+    usable CPU, WARM_DRAINS warm drains then TIMED_DRAINS timed ones,
+    each into a fresh work dir. Prints one JSON line {walls: [...]}
+    (timed drains only)."""
+    import importlib.util
+
+    import pyarrow.parquet as pq
+
+    # run_pipeline.py puts its own tree first on sys.path when loaded
+    spec = importlib.util.spec_from_file_location(
+        "run_pipeline", os.path.join(tree, "scripts", "run_pipeline.py")
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    events = pq.read_metadata(os.path.join(sf_dir, "events.parquet")).num_rows
+    cpus = len(os.sched_getaffinity(0))
+    base = tempfile.mkdtemp(prefix="bench_ab_drain_")
+    walls = []
+    try:
+        for i in range(WARM_DRAINS + TIMED_DRAINS):
+            work = os.path.join(base, str(i))
+            t0 = time.perf_counter()
+            with redirect_stdout(sys.stderr):
+                out = mod.run(sf_dir, work, cpus)
+            d = time.perf_counter() - t0
+            if not out["wire_rows"] == out["lake_rows"] == events:
+                raise SystemExit(f"drain {i}: {out} vs {events} events")
+            shutil.rmtree(work, ignore_errors=True)
+            if i >= WARM_DRAINS:
+                walls.append(round(d, 3))
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+    print(json.dumps({"walls": walls}))
+
+
 def record_flags(bench_path: str) -> tuple[str, list[str], dict]:
     """Recompute the driver record's own normalized flag list.
 
@@ -185,6 +240,79 @@ def record_flags(bench_path: str) -> tuple[str, list[str], dict]:
     return ref_a, flagged, detail
 
 
+def arm_a_tree(ref: str) -> str:
+    """Arm A's source tree: `git archive <ref>` extracted once under
+    $TMPDIR."""
+    tree = os.path.join(tempfile.gettempdir(), f"bench_ab_tree_{ref}")
+    if not os.path.isdir(tree):
+        archive = subprocess.run(
+            ["git", "archive", ref], cwd=_REPO_ROOT,
+            capture_output=True, check=True,
+        )
+        # extract beside the final name and rename on success, so an
+        # interrupted extraction is never reused as arm A
+        part = tree + ".part"
+        shutil.rmtree(part, ignore_errors=True)
+        os.makedirs(part)
+        subprocess.run(["tar", "-x", "-C", part], input=archive.stdout,
+                       check=True)
+        os.rename(part, tree)
+    return tree
+
+
+def _interleave(
+    arms: dict[str, str],
+    reps: int,
+    worker_args: Callable[[str], list[str]],
+    describe: Callable[[dict], str],
+) -> dict[str, list[dict]]:
+    """Run `reps` worker processes per arm, interleaved rep by rep with
+    the first arm alternating (A B, B A, ...) so no order effect always
+    favours one arm. `worker_args(tree)` is the worker's argv after
+    this script; its last stdout line is its JSON record. Returns
+    {arm: [record per rep]}."""
+    runs: dict[str, list[dict]] = {a: [] for a in arms}
+    order = list(arms)
+    for rep in range(reps):
+        for arm in order if rep % 2 == 0 else order[::-1]:
+            out = subprocess.run(
+                [sys.executable, os.path.abspath(__file__),
+                 *worker_args(arms[arm])],
+                capture_output=True, text=True, cwd=arms[arm],
+            )
+            if out.returncode:
+                sys.stderr.write(out.stderr[-3000:])
+                raise SystemExit(f"rep {rep} arm {arm} failed")
+            rec = json.loads(out.stdout.strip().splitlines()[-1])
+            runs[arm].append(rec)
+            print(f"== rep {rep} arm {arm}: {describe(rec)}", flush=True)
+    return runs
+
+
+def pipeline_ab(args) -> None:
+    """Interleaved A/B of run_pipeline drains: `reps` worker processes
+    per arm; per-arm median wall and pairwise wins."""
+    arms = {"A": arm_a_tree(args.ref), "B": _REPO_ROOT}
+    runs = _interleave(
+        arms, args.reps,
+        lambda tree: ["--pipeline-worker", tree, args.sf_dir],
+        lambda rec: f"walls {rec['walls']}",
+    )
+    walls = {a: [r["walls"] for r in runs[a]] for a in runs}
+    flat = {a: [x for w in walls[a] for x in w] for a in walls}
+    pairs = list(zip(flat["A"], flat["B"]))
+    med = {a: statistics.median(flat[a]) for a in flat}
+    print(json.dumps({
+        "ref_a": args.ref, "sf_dir": args.sf_dir,
+        "cpus": len(os.sched_getaffinity(0)), "reps": args.reps,
+        "drains": TIMED_DRAINS,
+        "walls_a": walls["A"], "walls_b": walls["B"],
+        "median_a_s": round(med["A"], 3), "median_b_s": round(med["B"], 3),
+        "ratio_b_a": round(med["B"] / med["A"], 3),
+        "b_faster_pairs": f"{sum(b < a for a, b in pairs)}/{len(pairs)}",
+    }, indent=1))
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--ref", default="63e2eff",
@@ -196,13 +324,23 @@ def main() -> None:
                          "commit")
     ap.add_argument("--reps", type=int, default=3)
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
+    ap.add_argument("--pipeline", action="store_true",
+                    help="A/B scripts/run_pipeline.run drains, not queries")
     ap.add_argument("--worker", nargs="+", metavar="ARG",
                     help="(internal) tree sf_dir names...")
+    ap.add_argument("--pipeline-worker", nargs=2, metavar="ARG",
+                    help="(internal) tree sf_dir")
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
 
     if args.worker:
         worker(args.worker[0], args.worker[1], args.worker[2:])
+        return
+    if args.pipeline_worker:
+        pipeline_worker(*args.pipeline_worker)
+        return
+    if args.pipeline:
+        pipeline_ab(args)
         return
 
     detail = None
@@ -214,27 +352,13 @@ def main() -> None:
               flush=True)
     else:
         names = args.names or REGRESSED_R5
-    tree_a = f"/tmp/bench_ab_tree_{args.ref}"
-    if not os.path.isdir(tree_a):
-        subprocess.run(
-            ["git", "worktree", "add", "--detach", tree_a, args.ref],
-            cwd=_REPO_ROOT, check=True,
-        )
-    arms = {"A": tree_a, "B": _REPO_ROOT}
-    runs: dict[str, list[dict]] = {"A": [], "B": []}
-    for rep in range(args.reps):
-        for arm in ("A", "B"):  # strict interleave A B A B A B
-            out = subprocess.run(
-                [sys.executable, os.path.abspath(__file__), "--worker",
-                 arms[arm], args.sf_dir, *names],
-                capture_output=True, text=True, check=True,
-                cwd=arms[arm],
-            )
-            rec = json.loads(out.stdout.strip().splitlines()[-1])
-            runs[arm].append(rec)
-            print(f"== rep {rep} arm {arm}: cal {rec['calibration_s']}"
-                  f" total {round(sum(rec['queries'].values()), 2)}",
-                  flush=True)
+    arms = {"A": arm_a_tree(args.ref), "B": _REPO_ROOT}
+    runs = _interleave(
+        arms, args.reps,
+        lambda tree: ["--worker", tree, args.sf_dir, *names],
+        lambda rec: f"cal {rec['calibration_s']} "
+                    f"total {round(sum(rec['queries'].values()), 2)}",
+    )
 
     cal = {a: min(r["calibration_s"] for r in runs[a]) for a in runs}
     cal_ratio = cal["B"] / cal["A"]

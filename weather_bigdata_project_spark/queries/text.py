@@ -79,6 +79,15 @@ _TOK_STATS_INLINE = (
     + " AS _nstop))"
 )
 
+# The stopword-density heuristic needs only two of those fields. Struct
+# fields of a generator are not pruned, so its consumers inline this
+# two-field struct and never pay for array_distinct or avg_tok_len.
+_STOP_STATS_INLINE = (
+    "transform(array(split(text, ' ')), toks -> struct("
+    f"CAST(size(filter(toks, t -> t IN {T.STOPWORDS_SQL})) AS DOUBLE) AS _ns, "
+    "size(toks) AS _nt))"
+)
+
 
 # --- language-ID heuristic ------------------------------------------------
 
@@ -102,18 +111,18 @@ _TOK_STATS_INLINE = (
 def text_language_id(spark, sf_dir):
     """n-gram/stopword language heuristic: English stopword density over
     whitespace tokens. Round 10: computed fully IN-ROW from the split
-    array (see _TOK_STATS_INLINE) — the explode + hash-agg shuffle is
+    array (see _STOP_STATS_INLINE) — the explode + hash-agg shuffle is
     gone; the operator is a narrow map over the corpus scan."""
     return (
         T.docs(spark, sf_dir)
         .filter(F.col("text").isNotNull())
-        .select("doc_id", F.inline(F.expr(_TOK_STATS_INLINE)))
+        .select("doc_id", F.inline(F.expr(_STOP_STATS_INLINE)))
         .select(
             "doc_id",
-            F.when(F.col("_nstop") / F.col("n_tokens") >= 0.05, "en")
+            F.when(F.col("_ns") / F.col("_nt") >= 0.05, "en")
             .otherwise("unknown")
             .alias("lang_pred"),
-            F.expr(rnd("_nstop / n_tokens", 4)).alias("stop_ratio"),
+            F.expr(rnd("_ns / _nt", 4)).alias("stop_ratio"),
         )
     )
 
@@ -548,16 +557,10 @@ def text_langid_confusion(spark, sf_dir):
     exchanges left are the |langs| x |preds| matrix aggregates."""
     from ..operators.textops import materialize
 
-    stats = (
-        "transform(array(split(text, ' ')), toks -> struct("
-        f"CAST(size(filter(toks, t -> t IN {T.STOPWORDS_SQL})) "
-        "AS DOUBLE) AS _ns, "
-        "size(toks) AS _nt))"
-    )
     j = materialize(
         T.docs(spark, sf_dir)
         .filter(F.col("text").isNotNull())
-        .select("lang", F.inline(F.expr(stats)))
+        .select("lang", F.inline(F.expr(_STOP_STATS_INLINE)))
         .select(
             "lang",
             F.when(F.col("_ns") / F.col("_nt") >= 0.05, "en")

@@ -18,9 +18,34 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as Ty
 
 from .. import weather_domain as wd
 from ..session import tune
+
+#: the JSON wire records' schema (the exact Kafka wire schema); declared
+#: on every wire read, so no read pays a schema-inference pass
+WIRE_SCHEMA = Ty.StructType(
+    [Ty.StructField(n, Ty.StringType()) for n in wd.wire_wide_sql("é")]
+    + [Ty.StructField("event_id", Ty.LongType())]
+)
+
+
+#: files per wire micro-batch, and the feed's file count: FEED_FILES =
+#: 2 x WIRE_FILES_PER_TRIGGER drains each query in exactly 2 micro-batches
+WIRE_FILES_PER_TRIGGER = 4
+FEED_FILES = 2 * WIRE_FILES_PER_TRIGGER
+
+
+def write_wire_feed(spark: SparkSession, sf_dir: str, wire_dir: str) -> None:
+    """Materialize the synthetic wire stream as FEED_FILES even
+    JSON-lines files under `wire_dir` (the feed the file stream
+    replays). The spread happens on the two-column scan before
+    synthesis, so the only shuffle moves two ints per row, never the 14
+    wire strings."""
+    wd.wire_frame(spark, sf_dir, partitions=FEED_FILES).write.mode(
+        "overwrite"
+    ).json(wire_dir)
 
 
 def wire_file_stream(spark: SparkSession, wire_dir: str) -> DataFrame:
@@ -28,15 +53,9 @@ def wire_file_stream(spark: SparkSession, wire_dir: str) -> DataFrame:
     under the exact Kafka wire schema (S1's file twin). maxFilesPerTrigger
     bounds micro-batch size the way Kafka's maxOffsetsPerTrigger does."""
     tune(spark)
-    from pyspark.sql import types as Ty
-
-    schema = Ty.StructType(
-        [Ty.StructField(n, Ty.StringType()) for n in wd.wire_wide_sql("é")]
-        + [Ty.StructField("event_id", Ty.LongType())]
-    )
     return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "4")
+        spark.readStream.schema(WIRE_SCHEMA)
+        .option("maxFilesPerTrigger", str(WIRE_FILES_PER_TRIGGER))
         .json(wire_dir)
     )
 

@@ -251,7 +251,9 @@ def _adapt(sql: str, engine: str) -> str:
 
 # --- Spark-side pipeline (DataFrame API structure, F.expr scalars) --------
 
-def wire_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+def wire_frame(
+    spark: SparkSession, sf_dir: str, partitions: int | None = None
+) -> DataFrame:
     """Synthetic weather wire stream: 14 all-string columns, the exact
     reference wire schema (ref:spark-apps/weather_streaming.py:28-43).
 
@@ -261,11 +263,20 @@ def wire_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     string casts are the most expensive scalar work in the repo), so an
     unspread scan pins the whole weather family to one core. The spread
     moves two int columns — measured ~2x on the sf0.1 flagship; no-op
-    at production scale where the scan has thousands of splits."""
+    at production scale where the scan has thousands of splits.
+
+    `partitions` fixes the output layout instead: the two-column scan is
+    round-robin repartitioned to exactly that many partitions, which
+    replaces both the spread and any repartition of the finished
+    14-string frame (a feed writer gets equal files from one narrow
+    shuffle)."""
     from .operators.textops import spread_small_scan
 
     ev = tables.load(spark, sf_dir, "events").select("event_id", "user_id")
-    ev = spread_small_scan(ev, spark, f"{sf_dir}/events.parquet")
+    if partitions is None:
+        ev = spread_small_scan(ev, spark, f"{sf_dir}/events.parquet")
+    else:
+        ev = ev.repartition(partitions)
     num = ev.select(
         "event_id",
         "user_id",
